@@ -19,8 +19,6 @@ if _REPO_DIR not in sys.path:
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
-_SHIPPED: set[str] = set()
-
 
 def _ensure_shipped(spark: SparkSession) -> None:
     """Ship the package to executors (the harness may pass a session built

@@ -25,28 +25,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-DEFAULT_QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "j1_broadcast_part_join",
-    "a12_event_stats_rollup",
-    "w13_context_chain",
-    "w2_sessionize",
-    "d1_update_diff",
-    "dedup_lsh_pairs",
-    "dedup_simhash",
-    "text_doc_stats",
-    "ann_brute_force_topk",
-    "ann_lsh_topk",
-    "pipeline_event_type_counts",
-    "pipeline_text_md5",
-    "p3_row_decode",
-    "mm_decode_stats",
-    "ivf_kmeans_train",
-    "emb_neardup_pairs",
-    "training_curate_survivors",
-]
+from bench import BENCH_QUERIES, SF_DIR  # noqa: E402 — after the sys.path insert
 
 
 def formatted(spark, df) -> str:
@@ -59,7 +38,7 @@ def formatted(spark, df) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf", default=SF_DIR)
     ap.add_argument("--tag", default="run")
     ap.add_argument("--queries", default="")
     ap.add_argument("--repeats", type=int, default=3)
@@ -68,7 +47,7 @@ def main() -> None:
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
 
-    names = [q for q in args.queries.split(",") if q] or DEFAULT_QUERIES
+    names = [q for q in args.queries.split(",") if q] or BENCH_QUERIES
 
     from mysql_cdc_rs_spark.queries import QUERIES
     from mysql_cdc_rs_spark.session import build_session

@@ -34,14 +34,6 @@ def mysql_time_seconds(col: Column) -> Column:
     return (h * 3600 + m * 60 + s).alias("seconds")
 
 
-def mysql_time2_parts(col: Column) -> tuple[Column, Column, Column]:
-    """TIME2 24-bit BE word -> (hour, minute, second) via shifts (C8)."""
-    hour = F.shiftright(col, 12).bitwiseAND(F.lit(0x3FF))
-    minute = F.shiftright(col, 6).bitwiseAND(F.lit(0x3F))
-    second = col.bitwiseAND(F.lit(0x3F))
-    return hour, minute, second
-
-
 def mysql_datetime(col: Column) -> Column:
     """Legacy DATETIME u64 decimal-packed YYYYMMDDHHMMSS -> timestamp (C9)."""
     d = (col / F.lit(1000000)).cast("long")
@@ -56,31 +48,6 @@ def mysql_datetime(col: Column) -> Column:
     )
 
 
-def mysql_datetime2(col: Column) -> Column:
-    """DATETIME2 40-bit word (sign cleared) -> timestamp via bit fields (C9)."""
-    v = col.bitwiseAND(F.lit((1 << 39) - 1))
-    ym = F.shiftright(v, 22).bitwiseAND(F.lit(0x1FFFF))
-    return F.make_timestamp(
-        (ym / 13).cast("int"),
-        (ym % 13).cast("int"),
-        F.shiftright(v, 17).bitwiseAND(F.lit(0x1F)).cast("int"),
-        F.shiftright(v, 12).bitwiseAND(F.lit(0x1F)).cast("int"),
-        F.shiftright(v, 6).bitwiseAND(F.lit(0x3F)).cast("int"),
-        v.bitwiseAND(F.lit(0x3F)).cast("decimal(8,6)"),
-    )
-
-
-def mysql_timestamp(col: Column) -> Column:
-    """Epoch-seconds u32 -> TimestampType (C10)."""
-    return F.timestamp_seconds(col)
-
-
-def fractional_micros(col: Column, fsp: int) -> Column:
-    """Stored fractional value -> microseconds: v * 100^(3-bytes) (C11)."""
-    nbytes = (fsp + 1) // 2
-    return (col * F.lit(100 ** (3 - nbytes))).cast("long")
-
-
 def tld_of_url(url: Column) -> Column:
     """https://host.tld/path -> tld (enrichment join key)."""
     host = F.parse_url(url, F.lit("HOST"))
@@ -91,16 +58,20 @@ def host_of_url(url: Column) -> Column:
     return F.parse_url(url, F.lit("HOST"))
 
 
-def salted_key(key: Column, unique: Column, salt_buckets: int) -> Column:
-    """Skew salt: composite of the hot key and a deterministic per-row bucket.
+# Number of url-hash buckets used for explicit partitioning/lineage. At
+# 10^12 docs this is the table's physical partition key (Iceberg bucket
+# transform); locally it sizes lineage granularity.
+URL_BUCKETS = 256
 
-    ``unique`` must be a (mostly) row-unique column such as url — salting
-    must be deterministic so a resumed stage re-produces the same partitions
-    (checkpoint-resume contract, SURVEY §4 custom-work item 3).
+
+def url_bucket(url: Column) -> Column:
+    """url -> deterministic hash bucket in [0, URL_BUCKETS).
+
+    The one definition of the bucket that decoded rows carry and that
+    stage-resume lineage (plans.checkpoint) is keyed on; a resumed stage
+    only matches its manifest if every site computes the same value.
     """
-    return F.concat_ws(
-        "#", key, F.pmod(F.xxhash64(unique), F.lit(salt_buckets)).cast("string")
-    )
+    return F.pmod(F.xxhash64(url), F.lit(URL_BUCKETS)).cast("int")
 
 
 def classify_sql_col(sql: Column) -> Column:

@@ -28,7 +28,6 @@ from pyspark.sql.types import (
 
 from mysql_cdc_rs_spark.kernel import jsonb as _jsonb
 from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
-from mysql_cdc_rs_spark.kernel.decode import decode_page  # noqa: F401 — re-export; oracle/tests import it from here
 
 DECODED_FIELDS = [
     ("status", IntegerType()),
@@ -48,7 +47,6 @@ DECODED_FIELDS = [
     ("headers", MapType(StringType(), StringType())),
 ]
 DECODED_SCHEMA = StructType([StructField(n, t, True) for n, t in DECODED_FIELDS])
-_COLS = [n for n, _ in DECODED_FIELDS]
 
 
 def make_decode_udf():

@@ -23,5 +23,3 @@ Capability parity map (reference = rust-us/mysql-cdc-rs @ /root/reference):
 All are re-implementations from the publicly documented MySQL binlog wire
 format and standard HTTP/WARC layout — no reference code is copied.
 """
-
-from mysql_cdc_rs_spark.kernel.decode import decode_page  # noqa: F401

@@ -75,15 +75,6 @@ def size_histogram(decoded: DataFrame, col: str = "raw_len") -> DataFrame:
     )
 
 
-def null_stats(decoded: DataFrame, cols: list[str]) -> DataFrame:
-    """A4b: per-column null counts + null fraction, one pass."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls_{c}"))
-    aggs.append(F.count("*").alias("n_rows"))
-    return decoded.agg(*aggs)
-
-
 def error_stats(decoded: DataFrame) -> DataFrame:
     """A6: errors by kind x tld — feeds the decode-error metrics sink."""
     return (
@@ -111,17 +102,6 @@ def charset_stats(decoded: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .orderBy("charset", "charset_source")
     )
-
-
-def throughput_report(n_rows: int, total_bytes: int, elapsed_s: float) -> dict:
-    """A9: rows/sec + bytes/sec — computed by the bench harness."""
-    return {
-        "rows": n_rows,
-        "bytes": total_bytes,
-        "elapsed_s": round(elapsed_s, 3),
-        "rows_per_s": round(n_rows / elapsed_s, 1) if elapsed_s else None,
-        "mb_per_s": round(total_bytes / 1e6 / elapsed_s, 2) if elapsed_s else None,
-    }
 
 
 def host_stats_salted(decoded: DataFrame, salt_buckets: int = 8) -> DataFrame:

@@ -93,18 +93,3 @@ def compare_query(spark, con, name: str, sf_dir: str) -> CompareResult:
             detail = f"first diff at sorted row {i}:\n  spark : {a}\n  oracle: {b}"
             break
     return CompareResult(name, False, len(s_rows), len(o_rows), detail)
-
-
-def compare_all(spark, sf_dir: str, names: list[str] | None = None):
-    from mysql_cdc_rs_spark.queries import QUERIES
-
-    con = duckdb_conn(sf_dir)
-    results = []
-    for name in names or QUERIES:
-        try:
-            results.append(compare_query(spark, con, name, sf_dir))
-        except Exception as e:  # noqa: BLE001 — harness must report, not die
-            results.append(
-                CompareResult(name, False, -1, -1, f"EXCEPTION: {e}")
-            )
-    return results

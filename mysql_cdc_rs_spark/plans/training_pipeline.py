@@ -29,24 +29,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mysql_cdc_rs_spark.functions.columns import url_bucket
 from mysql_cdc_rs_spark.functions.text import words_of
 from mysql_cdc_rs_spark.operators import dedup as DD
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 
 DEFAULT_MIN_TOKENS = 20
 
+# Verified candidate pairs per doc_b when curate(verify_jaccard=...) is on
+# (see curate's docstring for why the bound exists).
+VERIFY_MAX_PAIRS = 4
+
+
+def _text_bearing(decoded: DataFrame, *extra: str) -> DataFrame:
+    """Text-bearing decoded docs (event_type html/plain) as
+    (doc_id, text, *extra); doc_id is the url's trailing integer, which
+    both page generators emit."""
+    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
+    return decoded.filter(F.col("event_type").isin("html", "plain")).select(
+        doc_id.alias("doc_id"), "text", *extra
+    )
+
+
+def quality_corpus(decoded: DataFrame, min_tokens: int, *extra: str) -> DataFrame:
+    """The curation input every curate flavour dedups: text-bearing docs
+    with at least ``min_tokens`` whitespace words (JVM-side gate)."""
+    return _text_bearing(decoded, *extra).filter(
+        F.size(words_of(F.col("text"))) >= min_tokens
+    )
+
 
 def curate(
     pages: DataFrame,
-    doc_id_expr=None,
     min_tokens: int = DEFAULT_MIN_TOKENS,
     verify_jaccard: float | None = None,
-    verify_max_pairs: int = 4,
 ) -> DataFrame:
     """pages -> surviving (doc_id, text) corpus.
-
-    doc_id_expr: Column producing a unique numeric doc id (defaults to
-    extracting the trailing integer of the url, which both generators emit).
 
     verify_jaccard: opt-in exact-verification stage.  By default survivors
     drop on LSH candidacy alone, which over-drops on band collisions
@@ -56,8 +74,8 @@ def curate(
     the threshold drop their doc_b.  Off (None) leaves the plan
     byte-identical to round 4's.
 
-    verify_max_pairs BOUNDS the verification work: only each doc_b's
-    ``verify_max_pairs`` lowest-doc_a candidate pairs are verified (a
+    VERIFY_MAX_PAIRS BOUNDS the verification work: only each doc_b's
+    ``VERIFY_MAX_PAIRS`` lowest-doc_a candidate pairs are verified (a
     partitioned row_number, no global sort).  This is scale-critical, not
     cosmetic: on a high-dup-mass corpus candidacy is quadratic-ish inside
     the capped buckets — the 200k generator corpus yields 12.77M candidate
@@ -69,14 +87,6 @@ def curate(
     falls outside its k window survives (documented under-drop risk,
     favoring keeping data over dropping it).
     """
-    decoded = decode_pages(pages)
-    if doc_id_expr is None:
-        doc_id_expr = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-
-    textful = decoded.filter(
-        F.col("event_type").isin("html", "plain")
-    ).select(doc_id_expr.alias("doc_id"), "text")
-
     # The quality corpus feeds TWO branches (the LSH drops set and the
     # survivors anti-join); without a persist Spark re-executes the whole
     # decode subtree for each — at 100 TB that doubles the most expensive
@@ -84,9 +94,9 @@ def curate(
     # hold their slice.
     from pyspark import StorageLevel
 
-    quality = textful.filter(
-        F.size(words_of(F.col("text"))) >= min_tokens
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    quality = quality_corpus(decode_pages(pages), min_tokens).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # Materialize the cache in its own job before both branches fan out
     # over it.  The anti-join's first action otherwise runs the drops
     # subtree and the survivors scan as CONCURRENT sibling stages racing
@@ -104,7 +114,7 @@ def curate(
         w = Window.partitionBy("doc_b").orderBy("doc_a")
         bounded = (
             pairs.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= verify_max_pairs)
+            .where(F.col("_rn") <= VERIFY_MAX_PAIRS)
             .drop("_rn")
         )
         pairs = DD.ngram_jaccard_pairs(
@@ -152,17 +162,12 @@ def curate_resumable(
     """
     from mysql_cdc_rs_spark.plans.checkpoint import CheckpointedStage
 
-    pages_b = pages.withColumn(
-        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(256)).cast("int")
-    )
+    pages_b = pages.withColumn("url_bucket", url_bucket(F.col("url")))
 
     def quality_fn(df: DataFrame) -> DataFrame:
+        # decode_pages derives the same url_bucket again for each doc
         decoded = decode_pages(df.drop("url_bucket"))
-        doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-        textful = decoded.filter(
-            F.col("event_type").isin("html", "plain")
-        ).select(doc_id.alias("doc_id"), "text", "url_bucket")
-        return textful.filter(F.size(words_of(F.col("text"))) >= min_tokens)
+        return quality_corpus(decoded, min_tokens, "url_bucket")
 
     quality = CheckpointedStage(catalog, "curate_quality").run(
         pages_b, quality_fn
@@ -181,16 +186,11 @@ def curate_resumable(
 def curation_report(pages: DataFrame, min_tokens: int = DEFAULT_MIN_TOKENS) -> dict:
     """Stage-by-stage exact counts (the per-sink metrics analog)."""
     decoded = decode_pages(pages).cache()
-    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-    textful = decoded.filter(F.col("event_type").isin("html", "plain")).select(
-        doc_id.alias("doc_id"), "text"
-    )
-    quality = textful.filter(F.size(words_of(F.col("text"))) >= min_tokens)
     survivors = curate(pages, min_tokens=min_tokens)
     out = {
         "input": decoded.count(),
-        "text_bearing": textful.count(),
-        "quality_pass": quality.count(),
+        "text_bearing": _text_bearing(decoded).count(),
+        "quality_pass": quality_corpus(decoded, min_tokens).count(),
         "survivors": survivors.count(),
     }
     decoded.unpersist()

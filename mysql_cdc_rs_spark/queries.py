@@ -833,11 +833,7 @@ def _text_stats(spark, sf):
     counting, stopword/length quality ratios, order-sensitive polynomial
     fingerprint, GPT-2-shaped subword-boundary token count — all JVM-side
     expressions)."""
-    from mysql_cdc_rs_spark.functions.text import (
-        norm_ws,
-        portable_hash60,
-        words_of,
-    )
+    from mysql_cdc_rs_spark.functions.text import norm_ws, portable_hash60
     from mysql_cdc_rs_spark.operators.textstats import (
         FP_ACC_MOD,
         FP_MULT,
@@ -2176,43 +2172,46 @@ def _r4(spark, sf):
 def _p4_deflate(spark, sf):
     """P4 compressed-payload parity beyond gzip: text/plain pages with
     Content-Encoding: deflate — alternating zlib-wrapped and RAW deflate
-    streams — are built on executors and pushed through the REAL page
-    decoder (header grok -> decompress_body -> charset -> text), matching
-    MySQL 8's TRANSACTION_PAYLOAD multi-algorithm handling
+    streams — are built on executors and pushed through the production
+    batch decoder (``decode_batch``: header grok -> zlib/raw-deflate
+    fallback -> charset -> text), matching MySQL 8's TRANSACTION_PAYLOAD
+    multi-algorithm handling
     (/root/reference/binlog/src/decoder/mysql8_decoders.rs:14-97)."""
     import hashlib
     import zlib
 
     import pandas as pd
 
-    from mysql_cdc_rs_spark.kernel.decode import decode_page
+    from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
 
     docs = load(spark, sf, "documents").filter(F.col("doc_id") < 400).select(
         "doc_id", "text"
     )
 
+    def page(did: int, text: str) -> bytes:
+        body = zlib.compress(" ".join(text.split()).encode("utf-8"))
+        if did % 2 == 1:  # raw deflate stream (no zlib header)
+            body = body[2:-4]
+        head = (
+            "HTTP/1.1 200 OK\r\n"
+            "Content-Type: text/plain; charset=utf-8\r\n"
+            "Content-Encoding: deflate\r\n"
+            f"Content-Length: {len(body)}\r\n\r\n"
+        ).encode("ascii")
+        return head + body
+
     def rt(batches):
         for pdf in batches:
-            out = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                norm = " ".join(text.split())
-                body = zlib.compress(norm.encode("utf-8"))
-                if did % 2 == 1:  # raw deflate stream (no zlib header)
-                    body = body[2:-4]
-                head = (
-                    "HTTP/1.1 200 OK\r\n"
-                    "Content-Type: text/plain; charset=utf-8\r\n"
-                    "Content-Encoding: deflate\r\n"
-                    f"Content-Length: {len(body)}\r\n\r\n"
-                ).encode("ascii")
-                d = decode_page(head + body)
-                out.append((
-                    did,
-                    hashlib.md5((d["text"] or "").encode("utf-8")).hexdigest(),
-                    d["route"],
-                ))
-            yield pd.DataFrame(out, columns=["doc_id", "text_md5", "route"])
+            ids = [int(d) for d in pdf["doc_id"]]
+            d = decode_batch([page(i, t) for i, t in zip(ids, pdf["text"])])
+            yield pd.DataFrame({
+                "doc_id": ids,
+                "text_md5": [
+                    hashlib.md5((t or "").encode("utf-8")).hexdigest()
+                    for t in d["text"]
+                ],
+                "route": d["route"],
+            })
 
     return docs.mapInPandas(
         rt, schema="doc_id long, text_md5 string, route string"

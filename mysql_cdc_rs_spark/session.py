@@ -20,8 +20,9 @@ import os
 from pyspark.sql import SparkSession
 
 # Shuffle partition count sized for local[32] test runs; on a real cluster
-# this is overridden via spark-submit conf (AQE coalesces down at runtime).
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+# override it through extra_conf or spark-submit conf (AQE coalesces down at
+# runtime).
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def build_session(
@@ -143,8 +144,3 @@ def ship_package(spark: SparkSession) -> None:
         sc.addPyFile(pkg_root)
     # else: installed as a wheel/egg-dir the workers share — nothing to ship
     _SHIPPED.add(sc.applicationId)
-
-
-def get_active_or_build(**kwargs) -> SparkSession:
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session(**kwargs)

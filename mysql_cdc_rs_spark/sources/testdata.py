@@ -17,9 +17,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load(spark, sf_dir: str, table: str):
     if table not in TABLES:
         raise KeyError(table)
@@ -62,12 +59,3 @@ def spread(df):
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def load_all(spark, sf_dir: str) -> dict:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark, sf_dir: str) -> None:
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

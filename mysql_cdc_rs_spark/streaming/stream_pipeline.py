@@ -300,8 +300,8 @@ def start_curation_stream(
     ``compact_max_minors`` deltas so the probe's generation-join count
     stays bounded (see ``compact_seen_buckets``).
     """
-    from mysql_cdc_rs_spark.functions.text import words_of
     from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
 
     SEEN, CURATED, MANIFEST = "dedup_seen_buckets", "curated", "stream_curate"
     cap = DD.MAX_BUCKET
@@ -311,13 +311,8 @@ def start_curation_stream(
         last = m.get("last_batch_id", -1) if m else -1
         if batch_id <= last:
             return  # replayed after restart: this batch is fully applied
-        decoded = decode_pages(_fan_out(batch_df))
-        doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-        textful = decoded.filter(
-            F.col("event_type").isin("html", "plain")
-        ).select(doc_id.alias("doc_id"), "text")
-        quality = textful.filter(
-            F.size(words_of(F.col("text"))) >= min_tokens
+        quality = quality_corpus(
+            decode_pages(_fan_out(batch_df)), min_tokens
         ).persist()
         # Materialize each persisted frame in its OWN job before anything
         # fans out over it.  Without the barrier, the first append's job
