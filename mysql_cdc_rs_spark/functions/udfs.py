@@ -83,11 +83,6 @@ def make_decode_udf():
     return _decode.asNondeterministic()
 
 
-# default instance (built-ins only; rebuilt by with_decoded so extensions
-# registered before plan construction are honored)
-decode_page_udf = make_decode_udf()
-
-
 @pandas_udf(StringType())
 def jsonb_decode_udf(payload: pd.Series) -> pd.Series:
     """MySQL-JSONB binary -> canonical JSON string (kernel C13)."""

@@ -402,21 +402,23 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_topk_nprobe(
+def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
     k: int = 10,
-    nprobe: int = 2,
+    nprobe: int = 1,
 ) -> DataFrame:
-    """ANN top-k probing the query's ``nprobe`` nearest IVF cells — the
-    recall lever of inverted-file search: nprobe=1 misses neighbors that
-    fell just across a cell boundary; probing the next-nearest cells
-    recovers them at ``nprobe``x the candidate cost, still a tiny fraction
-    of the corpus.  Plan shape is unchanged from nprobe=1: the corpus is
-    scanned once (assignment), the (query, probe-cell) pairs are a
-    BROADCAST side of queries*nprobe rows, and the cell id remains the
-    partition-pruning key at 10^12 scale."""
+    """ANN top-k probing the query's ``nprobe`` nearest IVF cells.
+
+    ``nprobe`` is the recall lever of inverted-file search: nprobe=1 probes
+    only the query's own cell and misses neighbors that fell just across a
+    cell boundary; probing the next-nearest cells recovers them at
+    ``nprobe``x the candidate cost, still a tiny fraction of the corpus.
+    The corpus is scanned once (assignment), the (query, probe-cell) pairs
+    are a BROADCAST side of queries*nprobe rows, and the cell id remains
+    the partition-pruning key at 10^12 scale.  Cells rank by the same
+    double cosine folds as ``ivf_assign``, ties to the lowest cent_id."""
     assigned = ivf_assign(corpus, centroids)
     c = centroids.select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
@@ -437,32 +439,6 @@ def ivf_topk_nprobe(
     )
     scored = (
         assigned.join(broadcast(probes), "cent_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("q_emb"), F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
-        .orderBy("query_id", "rank")
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame, queries: DataFrame, centroids: DataFrame, k: int = 10
-) -> DataFrame:
-    """ANN top-k probing only the query's IVF cell (nprobe=1)."""
-    assigned = ivf_assign(corpus, centroids)
-    q = ivf_assign(queries, centroids).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "cent_id",
-    )
-    scored = (
-        assigned.join(broadcast(q), "cent_id")
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("sim", cosine(F.col("q_emb"), F.col("embedding")))
     )

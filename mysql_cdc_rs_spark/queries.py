@@ -2689,7 +2689,7 @@ def _ann_ivf_np2(spark, sf):
     emb = load(spark, sf, "embeddings")
     centroids = emb.filter(F.col("vec_id") % 50 == 0)
     queries = emb.filter(F.col("vec_id") < 10)
-    return SIM.ivf_topk_nprobe(emb, queries, centroids, k=5, nprobe=2)
+    return SIM.ivf_topk(emb, queries, centroids, k=5, nprobe=2)
 
 
 # =========================================================================

@@ -27,7 +27,9 @@ from __future__ import annotations
 
 import gzip
 import hashlib
-from datetime import datetime, timedelta, timezone
+from datetime import timedelta
+
+from mysql_cdc_rs_spark.sources.pages import EPOCH, PAGES_SCHEMA
 
 TLDS8 = ["com", "org", "net", "io", "de", "fr", "edu", "gov"]
 CHARSETS4 = ["utf-8", "latin1", "gbk", "windows-1252"]
@@ -37,9 +39,6 @@ _CODEC = {
     "gbk": "gbk",
     "windows-1252": "cp1252",
 }
-EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
-
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def md5_60(s: str) -> int:

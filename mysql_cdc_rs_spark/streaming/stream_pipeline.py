@@ -36,16 +36,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.operators.route import route_table
-
-PAGES_DDL = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, make_record
 
 
 def stream_pages(spark, pages_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
     """File-arrival streaming source over the pages directory."""
     return (
-        spark.readStream.schema(PAGES_DDL)
+        spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
     )
@@ -66,8 +63,6 @@ def stream_pages_rate(
     """
     import pandas as pd
 
-    from mysql_cdc_rs_spark.sources.pages import make_record
-
     raw = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rows_per_batch)
@@ -82,7 +77,7 @@ def stream_pages_rate(
                 rows, columns=["url", "warc_ts", "html", "text", "lang"]
             )
 
-    return raw.mapInPandas(gen, schema=PAGES_DDL)
+    return raw.mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
 def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
@@ -230,9 +225,6 @@ def start_curation_stream(
     min_tokens: int = 20,
     available_now: bool = True,
     compact_every: int | None = None,
-    compact_n_buckets: int | None = None,
-    compact_mode: str = "major",
-    compact_max_minors: int = 8,
 ):
     """ONLINE training-data curation: decode -> quality gate -> incremental
     LSH near-dup drop, one micro-batch at a time — the streaming twin of
@@ -285,20 +277,12 @@ def start_curation_stream(
     ONE mid-run compaction spent most of its per-batch budget re-aggregating
     a ~25M-row tail (BENCH/SOAK.md).  A cadence bounds the tail to K
     batches' buckets, making per-batch probe cost independent of stream
-    lifetime; the compaction itself stays crash-safe (versioned table +
-    atomic pointer flip).  A crash DURING a cadence compaction loses no
-    state (the flip is atomic; pre-flip rows stay live) — the batch itself
+    lifetime.  A crash DURING a cadence compaction loses no state (the
+    ``seen_compact`` manifest replace is its only commit) — the batch itself
     was already manifest-committed, so on restart it replays as a skip and
     the missed compaction is simply picked up at the next cadence point,
-    with the tail at most 2K batches deep in the interim.
-    ``compact_n_buckets`` selects the bucketed layout on the first
-    compaction (sticky thereafter); size it to at least cluster cores.
-    ``compact_mode="minor"`` makes each cadence point past the first a
-    tail-only delta fold — O(K batches) of work instead of a full
-    O(history) rewrite, which is what makes a tight cadence affordable at
-    fleet scale — auto-promoting to a major merge every
-    ``compact_max_minors`` deltas so the probe's generation-join count
-    stays bounded (see ``compact_seen_buckets``).
+    with the tail at most 2K batches deep in the interim.  ``None`` never
+    compacts in-stream.
     """
     from mysql_cdc_rs_spark.operators import dedup as DD
     from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
@@ -364,12 +348,7 @@ def start_curation_stream(
             },
         )
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_seen_buckets(
-                catalog,
-                n_buckets=compact_n_buckets,
-                mode=compact_mode,
-                max_minors=compact_max_minors,
-            )
+            compact_seen_buckets(catalog)
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -421,16 +400,16 @@ def _seen_components(catalog, last: int):
 
     ``compacted_generations`` — the LIST of bucketed compacted generations
     (each one PRE-AGGREGATED rows per (band_id, bucket); together covering
-    batches ``<= through``), empty if no bucketed compaction has run.  The
-    list is the base generation plus any minor deltas (LSM levels): a MINOR
-    compaction folds only the flat tail into a new delta generation, so its
+    batches ``<= through``), empty if no compaction has run.  The list is
+    the base generation plus any minor deltas (LSM levels): a MINOR
+    compaction folds only the tail into a new delta generation, so its
     cost is O(tail), not O(history) — see ``compact_seen_buckets``.  Every
     generation is a table bucketed+sorted on the probe key, so consumers
     joining on (band_id, bucket) pay NO exchange and NO sort on these — the
     unbounded — sides.  Generations cover DISJOINT batch ranges, so summing
     per bucket across them is exact.
 
-    ``tail`` — the flat append-only rows from batches in ``(through,
+    ``tail`` — the append-only per-batch rows from batches in ``(through,
     last]``, aggregated to (band_id, bucket, n_members), or None when
     empty/absent.  Parquet min/max stats on batch_id skip the pre-``through``
     files wholesale (each micro-batch appended its own files), so the tail
@@ -438,7 +417,7 @@ def _seen_components(catalog, last: int):
 
     All pieces carry the same schema, and summing them per bucket is
     exactly the probe's prior count — the invariant every consumer
-    (the per-batch probe, both compaction flavors) is built on.
+    (the per-batch probe, minor and major compaction) is built on.
 
     The ``seen_compact`` manifest dict (or None) rides along so callers
     don't re-stat it.
@@ -496,7 +475,7 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     per-batch groupBy over 10^9+ state rows) and bucketed on the join key
     (no per-batch exchange, no sort; the scan is the whole cost).  With
     minor compaction the state is a short LIST of such generations (base +
-    deltas, bounded by ``max_minors``); each adds one exchange-free SMJ —
+    deltas, bounded by ``MAX_MINORS``); each adds one exchange-free SMJ —
     the batch side is partitioned once and every join preserves that
     partitioning, so the probe still pays exactly ONE batch-side exchange
     regardless of generation count.  Only the small post-compaction tail
@@ -520,9 +499,8 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
         # rank window and the probe joins share ONE exchange: the window
         # needs (band_id, bucket) clustering anyway, and matching the
         # compacted tables' partitioning count lets every SMJ reuse it
-        # instead of inserting a second batch-side shuffle.  NOTE this
-        # makes n_buckets the probe stage's task count — size it at least
-        # to the cluster's parallelism (see compact_seen_buckets).
+        # instead of inserting a second batch-side shuffle.  This makes
+        # n_buckets the probe stage's task count (see compact_seen_buckets).
         banded = banded.repartition(m["n_buckets"], "band_id", "bucket")
     w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
     ranked = banded.withColumn("r", F.row_number().over(w))
@@ -549,147 +527,62 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     return ranked.withColumn("p", p).drop(*parts)
 
 
-def _swap_seen(catalog, df: DataFrame) -> None:
-    """Replace the flat ``dedup_seen_buckets`` table with ``df`` behind the
-    versioned-name + atomic-pointer-flip protocol (crash on either side of
-    the flip leaves a readable, correct table).  The generation counter is
-    parsed from the current physical name, so the pointer manifest needs
-    no extra fields and ``catalog.flip_pointer`` stays the one flip API.
-    """
-    import re
-
-    prev = catalog.resolve("dedup_seen_buckets")
-    g = re.search(r"__g(\d+)$", prev)
-    version = f"dedup_seen_buckets__g{(int(g.group(1)) if g else 0) + 1}"
-    # 1. materialize under the version name (overwrite: retries idempotent)
-    catalog.overwrite(df, version)
-    # 2. the commit: one atomic manifest replace moves the live name
-    old = catalog.flip_pointer("dedup_seen_buckets", version)
-    # 3. post-commit cleanup (best-effort; an orphan dir is the worst case)
-    if old:
-        catalog.drop_physical(old)
+# Deltas a base generation carries before the next compaction merges them
+# all into a new base, bounding the probe at 1 + MAX_MINORS generation
+# joins.  4 is the fan-in the 12.8M soak ran with (BENCH/SOAK.md).
+MAX_MINORS = 4
 
 
-def compact_seen_buckets(
-    catalog,
-    n_buckets: int | None = None,
-    mode: str = "major",
-    max_minors: int = 8,
-) -> int:
-    """Rewrite ``dedup_seen_buckets`` as one summed row per (band_id,
-    bucket).
+def compact_seen_buckets(catalog) -> int:
+    """Fold the tail of ``dedup_seen_buckets`` into bucketed generations.
 
-    The stream appends one file-set per micro-batch and never merges the
-    bucket rows across batches; over a long run the table accumulates both
-    small files and repeated buckets.  Compaction collapses it to one row
-    per bucket with ``n_members`` summed (sum is exactly what the probe
-    aggregates at read time, so probe results are unchanged), tagged with
-    the last COMPLETED batch id (torn tails from a mid-batch crash are
-    dropped by the same batch_id filter the probe uses).  Run it BETWEEN stream runs — the availableNow
-    drain-then-stop pattern — never concurrently with one.  At 10^12 docs
-    this is the periodic maintenance job that keeps the probe-side join
-    input proportional to distinct buckets, not to batches.
+    The stream appends one file-set per micro-batch (the *tail*) and never
+    merges bucket rows across batches.  Compaction moves the tail, up to
+    the last COMPLETED batch, into *generations*: external tables under
+    ``catalog.base`` (a fresh session re-attaches them from the manifest)
+    holding one summed ``n_members`` row per (band_id, bucket), bucketed
+    AND sorted on that probe key with one file per bucket.  The probe
+    consumes every generation as stored — no exchange, no sort, no groupBy
+    on the side that grows with history (see ``seen_positions``).  Run it
+    between batches (``compact_every``) or between stream runs, never
+    concurrently with a probe.
 
-    Crash safety (round 5): the compacted rows land under a fresh
-    VERSIONED physical table, and the live name moves in ONE atomic
-    pointer flip (``catalog.flip_pointer`` -> os.replace of the manifest).
-    A crash before the flip leaves the old table live and an orphan
-    version dir that the retry overwrites; a crash after the flip leaves
-    the new table live and the old dir pending cleanup — there is no
-    instant at which ``dedup_seen_buckets`` is unreadable or wrong
-    (pinned by test_compact_seen_buckets_crash_safe).  On the Iceberg leg
-    ``overwrite`` is already one atomic snapshot swap (createOrReplace),
-    so the live name is rewritten directly.
+    Tiered: while a base generation exists with fewer than ``MAX_MINORS``
+    deltas, a MINOR compaction writes the tail alone as a new delta
+    generation — O(batches since the last compaction), independent of
+    history.  Otherwise a MAJOR compaction merges base + deltas + tail into
+    one new base.  Each state row is then rewritten once per minor it
+    enters plus once per major that merges it, not at every cadence point
+    (BENCH/SOAK.md).  No tail, no work.
 
-    ``n_buckets`` (parquet leg) selects the BUCKETED layout: the compacted
-    generation lands as an EXTERNAL table under ``catalog.base`` (a fresh
-    session re-attaches the definition from the manifest — state never
-    depends on session-scoped catalog metadata), bucketed AND sorted on
-    (band_id, bucket) — the probe's join key — with one file per bucket, and the
-    ``seen_compact`` manifest (table name, generation, ``through`` batch
-    watermark) moves in the same atomic os.replace commit.  Why this is the
-    at-scale layout: the compacted generation is the piece of state that
-    grows with corpus history, and every micro-batch joins against it;
-    stored pre-aggregated + pre-hashed + pre-sorted, that join needs no
-    exchange, no sort, and no groupBy on the unbounded side — the probe's
-    per-batch cost over history collapses to a columnar scan (see
-    ``seen_positions``).  The consumed flat tail is then dropped (readers
-    exclude it by the ``through`` watermark either way, so a crash between
-    the manifest commit and the cleanup loses nothing).  The layout is
-    sticky: later calls without ``n_buckets`` reuse the recorded bucket
-    count, so a flat rewrite can never double-count the compacted
-    generation.  On the Iceberg leg the same physical property is declared
-    instead of hand-built — a ``bucket(N, ...)`` partition transform plus
-    storage-partitioned joins — so ``n_buckets`` is ignored there.
+    The bucket count is the session's ``spark.sql.shuffle.partitions`` at
+    the first compaction and the manifest's recorded count ever after, so
+    the declared bucket spec always matches every generation's files.  It
+    is also the probe stage's task count (the batch side repartitions to
+    it), which is why it follows the engine's reduce width.
 
-    Sizing ``n_buckets``: it becomes the probe stage's task count (the
-    batch side repartitions to it so the rank window and join share one
-    exchange), so set it to AT LEAST the cluster's total cores — and high
-    enough that one bucket's state slice stays comfortably in an
-    executor's memory (distinct_buckets / n_buckets rows per task).
-    Too-low n_buckets silently caps probe parallelism the same way an
-    under-partitioned source caps decode (see ``_fan_out``).
+    Crash safety: the new generation lands under a fresh name first; the
+    ONE commit is the atomic replace of the ``seen_compact`` manifest
+    (base table, minors, gen, ``through`` watermark, n_buckets, columns).
+    A crash before it leaves an orphan table that no manifest lists and
+    the retry overwrites under the same name; a crash after it, during
+    cleanup of the merged generations or the consumed tail, leaves orphans
+    the probe never reads (unlisted tables; tail rows at or below
+    ``through``).  Pinned by test_compact_seen_buckets_crash_safe.  On the
+    Iceberg leg the state table is rewritten in place, one summed row per
+    bucket, by a single atomic ``createOrReplace`` snapshot swap.
 
-    ``mode="minor"`` (parquet bucketed layout only) is the LSM answer to
-    the 12.8M soak's honest negative — under a cadence, every major
-    compaction re-reads and re-writes the ENTIRE accumulated bucket set, so
-    below ~16 batches of history the cadence costs more than the tail
-    savings it buys.  A minor compaction folds ONLY the flat tail into a
-    NEW bucketed delta generation (cost O(batches since last compaction),
-    independent of history) and appends it to the manifest's ``minors``
-    list; the base and prior deltas are untouched.  The probe then joins
-    base + deltas + tail — every generation exchange-free (see
-    ``seen_positions``) — so probe cost stays flat while compaction cost
-    stops growing with corpus history.  When the delta count reaches
-    ``max_minors`` the call PROMOTES itself to a major merge (base + all
-    deltas + tail -> one new base), bounding the probe's join count; with
-    cadence K and promotion every ``max_minors`` minors, total bytes
-    rewritten over B batches drop from O(B²/K) — every cadence point pays
-    full history — to O(B²/(K·max_minors)) with the quadratic term's
-    constant shrunk by the fan-in (each row is rewritten once per minor it
-    enters plus once per major that merges it) — the classic tiered-LSM
-    write-amplification trade.  Minor mode
-    requires an existing bucketed generation (first call, flat layout and
-    the Iceberg leg fall through to the normal path; on Iceberg the
-    incremental analog would be MERGE INTO / rewrite_data_files, which the
-    runtime jar owns).  Crash safety is unchanged: the delta lands under a
-    versioned table first and the ``minors`` list moves in the same single
-    atomic manifest replace; a replayed batch below the new ``through``
-    watermark is excluded by the probe's batch_id filter either way.
-
-    Returns the distinct bucket count after compaction (for a minor: the
-    bucket count of the new delta generation; 0 for a no-op).
+    Returns the distinct bucket count of the new generation; 0 for a no-op.
     """
     m = catalog.read_manifest("stream_curate")
     last = m.get("last_batch_id", -1) if m else -1
     if last < 0:
         return 0
     comps, tail, _, cm = _seen_components(catalog, last)
-    if n_buckets is None and cm:
-        n_buckets = cm["n_buckets"]  # sticky layout
-    # An EXPLICIT n_buckets that disagrees with the recorded layout forces
-    # a major rewrite: a minor would write its delta with the new bucket
-    # count while base and earlier deltas keep their old physical
-    # bucketing, and the single manifest n_buckets field would then
-    # declare a bucket spec that doesn't match those files — the
-    # exchange-free sort-merge probe trusts the declaration, so prior
-    # counts (and dedup drops) would go silently wrong after a restart.
-    # Promoting re-buckets the WHOLE state at the new count in one
-    # generation, keeping declaration and files consistent.
-    rebucket = bool(cm) and n_buckets is not None and n_buckets != cm["n_buckets"]
-    minor = (
-        mode == "minor"
-        and not rebucket
-        and bool(comps)
-        and n_buckets is not None
-        and not getattr(catalog, "use_iceberg", False)
-        and len((cm or {}).get("minors", [])) < max_minors
-    )
-    if minor and tail is None:
+    if tail is None:
         return 0  # nothing new to fold; no generation bump
-    parts = [tail] if minor else comps + ([tail] if tail is not None else [])
-    if not parts:
-        return 0
+    minor = bool(comps) and len(cm.get("minors", [])) < MAX_MINORS
+    parts = [tail] if minor else comps + [tail]
     seen = parts[0]
     for extra in parts[1:]:
         seen = seen.unionByName(extra)
@@ -697,24 +590,26 @@ def compact_seen_buckets(
         seen = seen.groupBy("band_id", "bucket").agg(
             F.sum("n_members").alias("n_members")
         )
-    seen = seen.withColumn("batch_id", F.lit(last))
-    if getattr(catalog, "use_iceberg", False):
+    if catalog.use_iceberg:
         # createOrReplace commits the new snapshot atomically, reading the
-        # prior snapshot as input — no pointer dance needed
-        catalog.overwrite(seen, "dedup_seen_buckets")
-        return catalog.read("dedup_seen_buckets").count()
-    if n_buckets is None:
-        _swap_seen(catalog, seen)
+        # prior snapshot as input
+        catalog.overwrite(
+            seen.withColumn("batch_id", F.lit(last)), "dedup_seen_buckets"
+        )
         return catalog.read("dedup_seen_buckets").count()
     import hashlib
     import os
 
     from mysql_cdc_rs_spark.operators.bucketing import write_bucketed
 
-    gen = (cm.get("gen", 0) if cm else 0) + 1
+    n_buckets = (
+        cm["n_buckets"]
+        if cm
+        else int(catalog.spark.conf.get("spark.sql.shuffle.partitions"))
+    )
+    gen = (cm["gen"] if cm else 0) + 1
     tag = hashlib.md5(os.path.abspath(catalog.base).encode()).hexdigest()[:8]
     table = f"dedup_seen_compact_{tag}_g{gen}"
-    body = seen.drop("batch_id")
     # 1. materialize the new generation as an EXTERNAL bucketed table whose
     #    files live under catalog.base (state outlives the session; the
     #    catalog entry is re-attached on demand by _ensure_compact_table).
@@ -722,7 +617,7 @@ def compact_seen_buckets(
     #    so each task owns exactly one bucket -> ONE file per bucket; a
     #    crash here leaves an orphan table the retry overwrites.
     write_bucketed(
-        body.repartition(n_buckets, "band_id", "bucket"),
+        seen.repartition(n_buckets, "band_id", "bucket"),
         table,
         ["band_id", "bucket"],
         n_buckets,
@@ -734,13 +629,13 @@ def compact_seen_buckets(
     #    schema the files were WRITTEN with, not a hardcoded snapshot.
     columns = ", ".join(
         f"{f.name} {f.dataType.simpleString().upper()}"
-        for f in body.schema.fields
+        for f in seen.schema.fields
     )
     catalog.write_manifest(
         "seen_compact",
         {
-            "table": table if not minor else cm["table"],
-            "minors": (cm.get("minors", []) + [table]) if minor else [],
+            "table": cm["table"] if minor else table,
+            "minors": cm.get("minors", []) + [table] if minor else [],
             "gen": gen,
             "through": last,
             "n_buckets": n_buckets,
@@ -755,8 +650,7 @@ def compact_seen_buckets(
         for old in _gen_tables(cm):
             catalog.spark.sql(f"DROP TABLE IF EXISTS {old}")
             catalog.drop_physical(old)
-    if catalog.exists("dedup_seen_buckets"):
-        catalog.drop_physical(catalog.resolve("dedup_seen_buckets"))
+    catalog.drop_physical("dedup_seen_buckets")
     return catalog.spark.table(table).count()
 
 

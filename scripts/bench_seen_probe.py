@@ -51,9 +51,13 @@ def main() -> None:
         seen_positions,
     )
 
+    # the compaction takes its bucket count from the shuffle width
     spark = build_session(
         "seen-probe-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.sql.shuffle.partitions": str(N_BUCKETS),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {
@@ -97,7 +101,7 @@ def main() -> None:
             cat.write_manifest("stream_curate", {"last_batch_id": 0})
             if layout == "bucketed":
                 t0 = time.monotonic()
-                compact_seen_buckets(cat, n_buckets=N_BUCKETS)
+                compact_seen_buckets(cat)
                 res["bucketed_compact_sec"] = round(time.monotonic() - t0, 3)
             times = []
             for _ in range(3):

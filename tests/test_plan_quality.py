@@ -306,7 +306,13 @@ def test_seen_probe_bucketed_state_no_exchange(spark, tmp_path):
         cat.append(state, "dedup_seen_buckets")
         cat.write_manifest("stream_curate", {"last_batch_id": 0})
         if layout == "bucketed":
-            compact_seen_buckets(cat, n_buckets=8)
+            # the first compaction takes its bucket count from here
+            old = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            try:
+                compact_seen_buckets(cat)
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", old)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -339,7 +345,7 @@ def test_seen_probe_bucketed_state_no_exchange(spark, tmp_path):
 
 
 def test_seen_probe_lsm_generations_one_exchange(spark, tmp_path):
-    """Minor-compaction LSM state (round 5): the probe left-joins the base
+    """Tiered (LSM) compacted state: the probe left-joins the base
     generation plus each delta generation.  Every generation is bucketed on
     the probe key, so adding deltas adds bucketed SCANS, never shuffles:
     the plan must carry exactly ONE probe-key exchange (the batch side,
@@ -376,10 +382,16 @@ def test_seen_probe_lsm_generations_one_exchange(spark, tmp_path):
     lsm = SinkCatalog(spark, str(tmp_path / "lsm"))
     lsm.append(s0, "dedup_seen_buckets")
     lsm.write_manifest("stream_curate", {"last_batch_id": 0})
-    compact_seen_buckets(lsm, n_buckets=8)
+    # the first compaction takes its bucket count from here
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        compact_seen_buckets(lsm)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     lsm.append(s1, "dedup_seen_buckets")
     lsm.write_manifest("stream_curate", {"last_batch_id": 1})
-    compact_seen_buckets(lsm, mode="minor")
+    compact_seen_buckets(lsm)
     m = lsm.read_manifest("seen_compact")
     assert m["table"].endswith("_g1") and len(m["minors"]) == 1
 

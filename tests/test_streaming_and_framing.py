@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
@@ -10,6 +11,18 @@ from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.sources.framing import frame_blobs, pack_records, split_records
 from mysql_cdc_rs_spark.sources.pages import make_record, pages_df
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n: int):
+    """Run the block under ``spark.sql.shuffle.partitions=n``: the first
+    seen-state compaction takes its bucket count from it."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _http(body: bytes, i: int) -> bytes:
@@ -54,12 +67,12 @@ def test_frame_blobs_spark(spark):
     assert sorted(good) == [(0, 0), (0, 1), (0, 2), (1, 0)]
     assert errs == {1: "TRUNCATED_TAIL", 2: "NULL_CHUNK"}
     # framed records decode through the normal kernel path
-    from mysql_cdc_rs_spark.functions.udfs import decode_page_udf
+    from mysql_cdc_rs_spark.functions.udfs import make_decode_udf
 
     dec = (
         frame_blobs(df)
         .filter(F.col("frame_error").isNull())
-        .select(decode_page_udf("record").alias("d"))
+        .select(make_decode_udf()("record").alias("d"))
         .select("d.event_type")
         .collect()
     )
@@ -433,14 +446,10 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
             compact_seen_buckets,
         )
 
-        before = cat.read("dedup_seen_buckets").count()
+        seen = cat.read("dedup_seen_buckets")
+        before = seen.count()
+        distinct = seen.select("band_id", "bucket").distinct().count()
         after = compact_seen_buckets(cat)
-        distinct = (
-            cat.read("dedup_seen_buckets")
-            .select("band_id", "bucket")
-            .distinct()
-            .count()
-        )
         assert after == distinct <= before
         spark.createDataFrame([page(200, uniq + " late copy")], ddl).coalesce(
             1
@@ -451,6 +460,7 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
         q3.awaitTermination()
         got3 = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert 200 not in got3 and got3 >= got
+        spark.sql(f"DROP TABLE IF EXISTS {cat.read_manifest('seen_compact')['table']}")
 
 
 def test_socket_source_live_pages(spark):
@@ -554,22 +564,31 @@ def test_metrics_listener_flush_errors_counted(spark):
     assert lst.flush_errors == 2
 
 
-def test_compact_seen_buckets_crash_safe(spark):
-    """Round-5 crash-safety contract: at NO instant during compaction is
-    ``dedup_seen_buckets`` unreadable or wrong.  The compacted rows land
-    under a versioned physical name; the live name moves in one atomic
-    manifest flip.  Simulated crashes on both sides of the flip:
+def test_compact_seen_buckets_crash_safe(spark, monkeypatch):
+    """Crash-safety contract of the one compaction commit: at NO instant
+    is the seen state the probe reads unreadable or wrong.  A new
+    generation lands under a fresh name; the ``seen_compact`` manifest
+    replace is the only commit.  Simulated crashes on both sides of it:
 
-      (a) crash AFTER the version-table write, BEFORE the pointer flip:
-          the live table still reads the OLD (uncompacted) rows; a retry
-          completes and the dedup probe behaves identically;
-      (b) crash AFTER the flip, during old-dir cleanup: the live table
-          reads the NEW compacted rows; the orphan dir is cleanup-only.
+      (a) a MINOR compaction crashes at the manifest write: the orphan
+          delta is invisible to the probe, and the retry reuses the
+          generation name;
+      (b) a PROMOTION (major merge of base + deltas) crashes in
+          ``drop_physical`` after its commit: the new base is live, and
+          the merged generations are harmless orphans.
+
+    Probe positions stay identical throughout, and a late near-dup still
+    drops against the twice-crashed state.
     """
+    from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.streaming import stream_pipeline
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         compact_seen_buckets,
         read_curated,
+        seen_positions,
         start_curation_stream,
         stream_pages,
     )
@@ -590,52 +609,76 @@ def test_compact_seen_buckets_crash_safe(spark):
         "completely different vocabulary nothing shared at all here "
         "rivers mountains valleys glaciers meadows forests deserts " * 2
     )
+    t3 = (
+        "astronomy telescopes galaxies nebulae quasars pulsars orbit "
+        "gravity spectra redshift parallax photometry occultation " * 2
+    )
     ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
-        cat = SinkCatalog(spark, f"{tmp}/cur")
-        for batch in ([page(1, t1), page(2, t2)], [page(3, t1 + " x"), page(4, t2 + " y")]):
-            spark.createDataFrame(batch, ddl).coalesce(1).write.mode(
+        cur = f"{tmp}/cur"
+        cat = SinkCatalog(spark, cur)
+
+        def drain(rows):
+            spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
             q = start_curation_stream(
                 stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
             )
             q.awaitTermination()
-        baseline_rows = sorted(
-            tuple(r) for r in cat.read("dedup_seen_buckets").collect()
-        )
-        distinct_n = (
-            cat.read("dedup_seen_buckets")
-            .select("band_id", "bucket")
-            .distinct()
-            .count()
-        )
 
-        # (a) crash BEFORE the pointer flip: fail the ptr manifest write
+        def positions(last):
+            # every doc fed so far, ranked against the state as of `last`
+            banded = DD.banded_buckets(
+                quality_corpus(decode_pages(spark.read.parquet(src)), 10)
+            )
+            key = ["doc_id", "band_id", "bucket", "r", "p"]
+            return sorted(
+                map(tuple, seen_positions(banded, cat, last).select(*key).collect())
+            )
+
+        def generation(gen):
+            base = cat.read_manifest("seen_compact")["table"]
+            return base[: base.rindex("_g")] + f"_g{gen}"
+
+        drain([page(1, t1), page(2, t2)])
+        with _shuffle_partitions(spark, 4):
+            compact_seen_buckets(cat)  # base g1
+        drain([page(3, t1 + " x"), page(4, t2 + " y")])
+        want = positions(1)
+
+        # (a) minor crashes at its commit: fail the seen_compact write
         real_write = cat.write_manifest
 
         def crashing_write(name, payload):
-            if name == "ptr_dedup_seen_buckets":
-                raise RuntimeError("simulated crash before pointer flip")
+            if name == "seen_compact":
+                raise RuntimeError("simulated crash before compact commit")
             real_write(name, payload)
 
         cat.write_manifest = crashing_write
         with pytest.raises(RuntimeError):
             compact_seen_buckets(cat)
         cat.write_manifest = real_write
-        # live table unchanged — still every pre-crash row, still readable
-        assert (
-            sorted(tuple(r) for r in cat.read("dedup_seen_buckets").collect())
-            == baseline_rows
-        )
+        m = cat.read_manifest("seen_compact")
+        assert m["gen"] == 1 and m["minors"] == []
+        assert os.path.isdir(os.path.join(cur, generation(2)))  # orphan
+        assert cat.exists("dedup_seen_buckets")  # tail still live
+        assert positions(1) == want
 
-        # retry completes; live table is now the distinct set
-        after = compact_seen_buckets(cat)
-        assert after == distinct_n
-        assert cat.read("dedup_seen_buckets").count() == distinct_n
+        # the retry commits the SAME generation name as the minor delta
+        assert compact_seen_buckets(cat) > 0
+        m = cat.read_manifest("seen_compact")
+        assert m["gen"] == 2 and m["minors"] == [generation(2)]
+        assert not cat.exists("dedup_seen_buckets")
+        assert positions(1) == want
 
-        # (b) crash AFTER the flip, during cleanup of the previous dir
+        # (b) a promotion crashes in cleanup, after its commit
+        monkeypatch.setattr(stream_pipeline, "MAX_MINORS", 1)
+        drain([page(5, t3)])
+        want = positions(2)
+        merged = [m["table"]] + m["minors"]
+
         real_drop = cat.drop_physical
 
         def crashing_drop(physical):
@@ -645,40 +688,38 @@ def test_compact_seen_buckets_crash_safe(spark):
         with pytest.raises(RuntimeError):
             compact_seen_buckets(cat)
         cat.drop_physical = real_drop
-        # the flip already committed: live reads the new compacted table
-        assert cat.read("dedup_seen_buckets").count() == distinct_n
-        ptr = cat.read_manifest("ptr_dedup_seen_buckets")
-        assert ptr is not None and ptr["physical"].startswith(
-            "dedup_seen_buckets__g"
-        )
+        m = cat.read_manifest("seen_compact")
+        assert m["gen"] == 3 and m["table"] == generation(3)
+        assert m["minors"] == [] and m["through"] == 2
+        for t in merged:  # unlisted, but their files are still on disk
+            assert os.path.isdir(os.path.join(cur, t))
+        assert positions(2) == want
 
-        # dedup behavior against the compacted + twice-crashed state: a
-        # late near-dup of doc 1 still drops, fresh content still survives
-        spark.createDataFrame(
+        # dedup behavior against the twice-crashed state: a late near-dup
+        # of doc 1 still drops, fresh content still survives
+        drain(
             [page(50, t1 + " tail"), page(51, "planets comets meteors "
              "asteroids moons rings orbits eccentricity inclination "
-             "perihelion aphelion barycenter libration resonance " * 2)],
-            ddl,
-        ).coalesce(1).write.mode("append").parquet(src)
-        q = start_curation_stream(
-            stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
+             "perihelion aphelion barycenter libration resonance " * 2)]
         )
-        q.awaitTermination()
         got = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert 50 not in got and 51 in got
+        m = cat.read_manifest("seen_compact")
+        for t in merged + [m["table"]] + m["minors"]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_streaming_curation_bucketed_state_matches_batch(spark):
-    """Bucketed compacted-state layout (round 5): compaction with
-    ``n_buckets=`` rewrites the seen-bucket state as an external
-    pre-aggregated table bucketed on the probe key.  The contract under
-    test: (a) the stream still reproduces batch ``curate()`` EXACTLY across
-    a bucketed compaction; (b) state survives catalog-metadata loss (the
+    """Bucketed compacted state: compaction rewrites the seen-bucket tail
+    as an external pre-aggregated table bucketed on the probe key, with
+    ``spark.sql.shuffle.partitions`` buckets.  The contract under test:
+    (a) the stream still reproduces batch ``curate()`` EXACTLY across a
+    bucketed compaction; (b) state survives catalog-metadata loss (the
     probe re-attaches the external table from the manifest — the
-    session-restart case); (c) a second compaction is sticky (reuses the
-    recorded bucket count), bumps the generation, and cleans up the old
-    generation and the consumed flat tail; (d) a crash before the manifest
-    commit leaves the probe on the old state and the retry is idempotent."""
+    session-restart case); (c) the second compaction is a minor: it keeps
+    the base, adds one delta at the recorded bucket count, and cleans up
+    the consumed tail; (d) a crash before the manifest commit leaves the
+    probe on the old state and the retry is idempotent."""
     from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
@@ -709,18 +750,19 @@ def test_streaming_curation_bucketed_state_matches_batch(spark):
             real_write(name, payload)
 
         cat.write_manifest = crashing_write
-        with pytest.raises(RuntimeError):
-            compact_seen_buckets(cat, n_buckets=16)
+        with _shuffle_partitions(spark, 16), pytest.raises(RuntimeError):
+            compact_seen_buckets(cat)
         cat.write_manifest = real_write
         assert cat.read_manifest("seen_compact") is None
-        assert cat.exists("dedup_seen_buckets")  # flat tail still live
+        assert cat.exists("dedup_seen_buckets")  # tail still live
 
         # retry completes (same generation name, overwrite is idempotent)
-        n_buckets_state = compact_seen_buckets(cat, n_buckets=16)
+        with _shuffle_partitions(spark, 16):
+            n_buckets_state = compact_seen_buckets(cat)
         m = cat.read_manifest("seen_compact")
         assert m["gen"] == 1 and m["n_buckets"] == 16
         assert n_buckets_state > 0
-        # the consumed flat tail is gone; the state lives in the external
+        # the consumed tail is gone; the state lives in the external
         # table under the catalog base, not the session warehouse
         assert not cat.exists("dedup_seen_buckets")
         assert os.path.isdir(os.path.join(f"{tmp}/cur", m["table"]))
@@ -741,22 +783,24 @@ def test_streaming_curation_bucketed_state_matches_batch(spark):
         release(surv)
         assert got == want
 
-        # (c) sticky second compaction: no n_buckets arg, gen bump, cleanup
-        old_table = m["table"]
+        # (c) second compaction: a minor — base kept, one delta at the
+        # recorded bucket count, consumed tail cleaned up
         compact_seen_buckets(cat)
         m2 = cat.read_manifest("seen_compact")
         assert m2["gen"] == 2 and m2["n_buckets"] == 16
-        assert m2["table"] != old_table
-        assert not spark.catalog.tableExists(old_table)
-        assert not os.path.isdir(os.path.join(f"{tmp}/cur", old_table))
-        # dedup behavior against gen-2 state: a replay of the full corpus
+        assert m2["table"] == m["table"] and len(m2["minors"]) == 1
+        assert m2["minors"][0].endswith("_g2")
+        assert os.path.isdir(os.path.join(f"{tmp}/cur", m2["minors"][0]))
+        assert not cat.exists("dedup_seen_buckets")
+        # dedup behavior against base + delta: a replay of the full corpus
         # as a late batch drops everything (every doc's buckets are seen)
         full.coalesce(1).write.mode("append").parquet(src)
         q3 = start_curation_stream(stream_pages(spark, src), cat, ckpt)
         q3.awaitTermination()
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
-        spark.sql(f"DROP TABLE IF EXISTS {m2['table']}")
+        for t in [m2["table"]] + m2["minors"]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_streaming_curation_seen_replay_not_double_counted(spark):
@@ -975,9 +1019,10 @@ def test_streaming_curation_compaction_cadence(spark):
     INSIDE the stream every K batches, bounding the flat tail the probe
     must re-aggregate to K batches' buckets.  Contract: (a) survivor set
     still EXACTLY matches batch ``curate()``; (b) the cadence actually
-    fired (generation == n_batches / K, watermark at the last batch);
-    (c) the final compaction consumed the whole flat tail; (d) a replayed
-    drain after the in-stream compactions stays a no-op."""
+    fired (generation == n_batches / K, watermark at the last batch, the
+    second one a minor delta on the first's base); (c) the final compaction
+    consumed the whole tail; (d) a replayed drain after the in-stream
+    compactions stays a no-op."""
     from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
@@ -1008,20 +1053,21 @@ def test_streaming_curation_compaction_cadence(spark):
             os.rename(os.path.join(stage, part), target)
             os.utime(target, (1_700_000_000 + i, 1_700_000_000 + i))
 
-        q = start_curation_stream(
-            stream_pages(spark, src, max_files_per_trigger=1),
-            cat,
-            ckpt,
-            compact_every=2,
-            compact_n_buckets=8,
-        )
-        q.awaitTermination()
+        with _shuffle_partitions(spark, 8):
+            q = start_curation_stream(
+                stream_pages(spark, src, max_files_per_trigger=1),
+                cat,
+                ckpt,
+                compact_every=2,
+            )
+            q.awaitTermination()
 
-        # (b) cadence fired after batches 1 and 3: two generations
+        # (b) cadence fired after batches 1 and 3: a base and one delta
         m = cat.read_manifest("seen_compact")
         assert m is not None and m["gen"] == 2 and m["n_buckets"] == 8
         assert m["through"] == 3
-        # (c) final compaction consumed the entire flat tail
+        assert m["table"].endswith("_g1") and len(m["minors"]) == 1
+        # (c) final compaction consumed the entire tail
         assert not cat.exists("dedup_seen_buckets")
 
         # (a) exact batch equality across two in-stream compactions
@@ -1037,23 +1083,23 @@ def test_streaming_curation_compaction_cadence(spark):
             cat,
             ckpt,
             compact_every=2,
-            compact_n_buckets=8,
         )
         q2.awaitTermination()
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
         assert cat.read_manifest("seen_compact")["gen"] == 2
-        spark.sql(f"DROP TABLE IF EXISTS {m['table']}")
+        for t in [m["table"]] + m["minors"]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_streaming_curation_minor_compaction_lsm(spark):
-    """LSM minor compaction (round 5): under ``compact_mode="minor"`` each
-    cadence point folds ONLY the flat tail into a new bucketed delta
-    generation — O(batches since last compaction), not O(history) — and a
-    major merge auto-fires when the delta count reaches
-    ``compact_max_minors``.  Contract under test, across SEVEN in-stream
-    compactions (major -> minor -> minor -> promoted major -> minor ->
-    minor -> promoted major):
+def test_streaming_curation_minor_compaction_lsm(spark, monkeypatch):
+    """Tiered compaction: while the base has fewer than ``MAX_MINORS``
+    deltas, each cadence point folds ONLY the tail into a new bucketed
+    delta generation — O(batches since last compaction), not O(history) —
+    and a major merge fires once the delta count reaches ``MAX_MINORS``
+    (2 here, so the lifecycle promotes twice).  Contract under test, across
+    SEVEN in-stream compactions (major -> minor -> minor -> promoted major
+    -> minor -> minor -> promoted major):
 
       (a) the survivor set still EXACTLY matches batch ``curate()`` — the
           multi-generation probe sums priors correctly;
@@ -1061,11 +1107,12 @@ def test_streaming_curation_minor_compaction_lsm(spark):
           delta list and physically drops every merged generation;
       (c) a probe in a metadata-less session re-attaches ALL generations
           (base and minors) from the manifest;
-      (d) a minor with no new tail is a no-op (no generation bump);
+      (d) a compaction with no new tail is a no-op (no generation bump);
       (e) a replayed drain after everything is still a no-op.
     """
     from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.streaming import stream_pipeline
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         compact_seen_buckets,
         read_curated,
@@ -1073,6 +1120,7 @@ def test_streaming_curation_minor_compaction_lsm(spark):
         stream_pages,
     )
 
+    monkeypatch.setattr(stream_pipeline, "MAX_MINORS", 2)
     n = 2800
     full = pages_df(spark, n, seed=42)
     docid = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
@@ -1100,15 +1148,13 @@ def test_streaming_curation_minor_compaction_lsm(spark):
                 cat,
                 ckpt,
                 compact_every=1,
-                compact_n_buckets=8,
-                compact_mode="minor",
-                compact_max_minors=2,
             )
             q.awaitTermination()
 
         for i in range(6):
             add_chunk(i)
-        drain()
+        with _shuffle_partitions(spark, 8):
+            drain()
 
         # (b) batch 0 -> first bucketed generation (major: nothing to fold
         # into); batches 1,2 -> minors; batch 3 -> promotion (merge g1+g2+g3
@@ -1124,11 +1170,11 @@ def test_streaming_curation_minor_compaction_lsm(spark):
             )
         for t in [m["table"]] + m["minors"]:
             assert os.path.isdir(os.path.join(f"{tmp}/cur", t))
-        # every cadence point consumed its whole flat tail
+        # every cadence point consumed its whole tail
         assert not cat.exists("dedup_seen_buckets")
 
-        # (d) no new tail -> minor is a no-op, not an empty generation
-        assert compact_seen_buckets(cat, mode="minor") == 0
+        # (d) no new tail -> a no-op, not an empty generation or a merge
+        assert compact_seen_buckets(cat) == 0
         assert cat.read_manifest("seen_compact")["gen"] == 6
 
         # (c) metadata loss: drop every session catalog entry; the next
@@ -1161,16 +1207,14 @@ def test_streaming_curation_minor_compaction_lsm(spark):
 
 
 
-def test_compact_minor_mismatched_n_buckets_promotes_major(spark):
-    """A minor compaction called with an explicit n_buckets that disagrees
-    with the recorded layout must not fold a delta: the delta would carry
-    the NEW physical bucketing while base generations keep the old one,
-    and the single manifest n_buckets field would declare a bucket spec
-    that doesn't match those files — the exchange-free sort-merge probe
-    trusts the declaration, so prior counts would go silently wrong after
-    a restart.  The call promotes itself to a MAJOR rewrite instead: one
-    generation at the new count, minors reset, probe positions identical
-    to a flat layout over the same state rows."""
+def test_compact_bucket_count_is_sticky(spark):
+    """The bucket count comes from ``spark.sql.shuffle.partitions`` at the
+    FIRST compaction only; later compactions read it from the manifest.
+    Changing the session setting afterwards must not re-bucket: the next
+    compaction is a minor whose delta has the recorded count, so the
+    manifest's one bucket spec matches the files of every generation (the
+    exchange-free sort-merge probe trusts it), and probe positions equal
+    those over the same state rows left uncompacted."""
     from mysql_cdc_rs_spark.operators import dedup as DD
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.sources.testdata import load
@@ -1199,20 +1243,26 @@ def test_compact_minor_mismatched_n_buckets_promotes_major(spark):
         cat = SinkCatalog(spark, f"{tmp}/lsm")
         cat.append(s0, "dedup_seen_buckets")
         cat.write_manifest("stream_curate", {"last_batch_id": 0})
-        compact_seen_buckets(cat, n_buckets=8)
+        with _shuffle_partitions(spark, 8):
+            compact_seen_buckets(cat)
         cat.append(s1, "dedup_seen_buckets")
         cat.write_manifest("stream_curate", {"last_batch_id": 1})
 
-        # mismatched explicit n_buckets + minor mode -> promoted major
-        compact_seen_buckets(cat, n_buckets=4, mode="minor")
+        with _shuffle_partitions(spark, 4):
+            compact_seen_buckets(cat)
         m = cat.read_manifest("seen_compact")
-        assert m["n_buckets"] == 4
-        assert m["minors"] == []
-        assert m["table"].endswith("_g2")
-        # the whole state (s0 + s1) lives in the one new generation
+        assert m["n_buckets"] == 8
+        assert m["table"].endswith("_g1")
+        assert [t[-3:] for t in m["minors"]] == ["_g2"]
+        for t in [m["table"]] + m["minors"]:
+            spec = {
+                r["col_name"]: r["data_type"]
+                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
+            }
+            assert spec["Num Buckets"] == "8"
         assert not cat.exists("dedup_seen_buckets")
 
-        # probe equality vs a flat layout over the identical rows
+        # probe equality vs the identical rows left uncompacted
         flat = SinkCatalog(spark, f"{tmp}/flat")
         flat.append(s0, "dedup_seen_buckets")
         flat.append(s1, "dedup_seen_buckets")
@@ -1225,4 +1275,5 @@ def test_compact_minor_mismatched_n_buckets_promotes_major(spark):
             map(tuple, seen_positions(banded, flat, 1).select(*key).collect())
         )
         assert got == want
-        spark.sql(f"DROP TABLE IF EXISTS {m['table']}")
+        for t in [m["table"]] + m["minors"]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
