@@ -7,16 +7,19 @@ route is a COLUMN, and the fan-out is ONE write partitioned by that column —
 a single pass over the data, no per-route job, no per-route shuffle.  Each
 route directory is then exposed as its own sink table.
 
-Per-sink exact counts (A3) come from the same single pass via a groupBy on
-the route column, written to the metrics sink; `routed-row equality` =
-union(routes) == decoded input, verified in tests with exceptAll.
+Per-sink exact counts (A3) are observed on that same write
+(``DataFrame.observe``): the sink is never read back to count it.
+``plans.pipeline.run_pipeline`` checks them against its report over the
+written table; `routed-row equality` = union(routes) == decoded input,
+verified in tests with exceptAll.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from mysql_cdc_rs_spark.kernel import registry
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
 ROUTES = ["content_html", "content_plain", "content_binary", "redirect", "errors"]
@@ -53,14 +56,29 @@ def route_table(enriched: DataFrame) -> DataFrame:
 def write_routes(enriched: DataFrame, catalog: SinkCatalog) -> dict[str, int]:
     """Single-pass fan-out write + exact per-sink counts.
 
-    Returns {route: row_count} computed from the written data (read-back),
-    so the counts attest what actually landed in the sink — the analog of
-    the reference's per-table metrics keyed by db.table
+    Returns {route: row_count} observed on the write itself: one
+    ``count_if`` per known route (the built-ins plus any registered with
+    ``register_route``) and a ``count(*)``, collected by the write job — the
+    analog of the reference's per-table metrics keyed by db.table
     (/root/reference/binlog/src/row/monitoring.rs:154-180).
+    Observed metrics come from successful task attempts only, so a retried
+    task is counted once.  Raises if a row lands on no known route.
     """
-    routed = route_table(enriched)
+    routes = sorted(set(ROUTES) | set(registry._ROUTE_OVERRIDES.values()))  # noqa: SLF001
+    obs = Observation("routes")
+    routed = route_table(enriched).observe(
+        obs,
+        F.count(F.lit(1)).alias("*"),
+        *(F.count_if(F.col("route") == r).alias(r) for r in routes),
+    )
     catalog.overwrite(routed, "routed", partition_by=["route"])
-    counts = route_counts(catalog.read("routed"))
+    observed = obs.get
+    total = observed.pop("*")
+    if sum(observed.values()) != total:
+        raise RuntimeError(
+            f"route counts {observed} do not sum to the {total} rows written"
+        )
+    counts = {r: n for r, n in observed.items() if n}
     catalog.write_manifest(
         "routes", {"counts": counts, "total": sum(counts.values())}
     )

@@ -2,8 +2,11 @@
 
 Mirrors the reference lifecycle (SURVEY §3.1) as four declarative stages.
 The hot path is exactly one vectorized UDF projection + two broadcast joins
-+ one partitioned write + metric groupBys — no per-row Python, no driver
-loops, no collect() of fact data.
++ one partitioned write that also observes the per-route counts — no
+per-row Python, no collect() of fact data.  With metrics
+on, two more jobs read the written table: one GROUPING SETS report and the
+top hosts (``stats.run_report``); the report's per-route row counts must
+equal the counts observed on the write.
 """
 
 from __future__ import annotations
@@ -63,19 +66,15 @@ def run_pipeline(
 
     metrics: dict[str, object] = {}
     if with_metrics:
-        # metrics computed from the PERSISTED routed table (attested counts)
-        decoded_cols = routed.withColumn(
-            "raw_len", F.coalesce(F.col("body_len"), F.lit(0))
-        )
-        metrics["per_sink"] = [r.asDict() for r in S.per_sink_metrics(routed).collect()]
-        metrics["event_type"] = [
-            r.asDict(True) for r in S.event_type_stats(decoded_cols).collect()
-        ]
-        metrics["errors"] = [r.asDict() for r in S.error_stats(decoded_cols).collect()]
-        metrics["top_hosts"] = [
-            r.asDict()
-            for r in S.host_stats_salted(decoded_cols).limit(20).collect()
-        ]
+        # metrics computed from the PERSISTED routed table, so its per-route
+        # rows attest the counts observed on the write
+        metrics = S.run_report(routed)
+        landed = {r["route"]: r["n_rows"] for r in metrics["per_sink"]}
+        if landed != counts:
+            raise RuntimeError(
+                f"routed table holds {landed} rows per route, "
+                f"the write counted {counts}"
+            )
         catalog.write_manifest("metrics", _json_safe(metrics))
 
     return PipelineResult(

@@ -87,6 +87,39 @@ def test_extension_works_inside_spark_udf(spark):
     assert (row["event_type"], row["text"]) == ("json", '{"k":1}')
 
 
+def test_registered_route_is_counted(spark):
+    """write_routes observes its counts on the write: a route added with
+    register_route is counted too, and the counts equal a read-back."""
+    import datetime
+
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.operators.enrich import enrich
+    from mysql_cdc_rs_spark.operators.route import route_counts, write_routes
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_df
+
+    @reg.register_mime_decoder("application/json")
+    def dec(body, charset):
+        return {"event_type": "json", "text": body.decode("utf-8")}
+
+    reg.register_route("json", "content_json")
+    ts = datetime.datetime(2024, 1, 1)
+    json_pages = spark.createDataFrame(
+        [
+            (f"https://api.example.com/{i}", ts, _raw_json_page(b'{"i":%d}' % i), "", "en")
+            for i in range(7)
+        ],
+        PAGES_SCHEMA,
+    )
+    pages = pages_df(spark, 200, seed=42).unionByName(json_pages)
+    with tempfile.TemporaryDirectory() as base:
+        cat = SinkCatalog(spark, base)
+        counts = write_routes(enrich(decode_pages(pages)), cat)
+        assert counts["content_json"] == 7
+        assert sum(counts.values()) == 207
+        assert counts == route_counts(cat.read("routed"))
+
+
 # --- relay segments -----------------------------------------------------------
 
 def test_segment_roundtrip_and_rollover(spark):

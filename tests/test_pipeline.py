@@ -7,6 +7,7 @@ decode output, exact fan-out counts, routed-row equality, resume semantics.
 
 from __future__ import annotations
 
+import itertools
 import tempfile
 
 import pytest
@@ -14,7 +15,12 @@ from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.operators.decode import decode_pages, split_errors
 from mysql_cdc_rs_spark.operators.enrich import enrich
-from mysql_cdc_rs_spark.operators.route import ROUTES, write_routes
+from mysql_cdc_rs_spark.operators.route import (
+    ROUTES,
+    route_counts,
+    route_table,
+    write_routes,
+)
 from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
@@ -93,7 +99,8 @@ def test_routing_fanout_and_equality(spark, pages):
         # routed-row equality: same url multiset in == out
         assert routed.select("url").exceptAll(pages.select("url")).count() == 0
         assert pages.select("url").exceptAll(routed.select("url")).count() == 0
-        # per-sink manifest counts attest the written data
+        # the counts observed on the write equal a read-back of the sink
+        assert counts == route_counts(routed)
         m = cat.read_manifest("routes")
         assert m["counts"] == counts and m["total"] == N
 
@@ -250,25 +257,46 @@ def test_charset_variety(decoded):
     assert {"utf-8", "latin-1", "gbk"} <= cs
 
 
-def test_salted_host_stats_equal_direct(decoded):
-    """Two-phase salted host aggregation == direct groupBy, exactly."""
-    got = {
-        r["host"]: (r["n_pages"], r["total_bytes"])
-        for r in S.host_stats_salted(decoded).collect()
-    }
-    direct = {
-        r["host"]: (r["n"], r["b"])
-        for r in decoded.groupBy("host")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.coalesce(F.col("raw_len"), F.lit(0))).alias("b"),
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs (AQE runs each shuffle stage as a
+    job of its own, so an aggregate action counts as two)."""
+    sc = spark.sparkContext
+    group = f"jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_pipeline_job_count(spark, pages):
+    """A metrics run costs the sink write, one read of the written table
+    and two aggregate actions (the report and the top hosts): a read-back
+    count pass, or any other extra action, fails this."""
+    with tempfile.TemporaryDirectory() as base:
+        cat = SinkCatalog(spark, base)
+        routed = route_table(enrich(decode_pages(pages)))
+        write = _jobs(
+            spark, lambda: cat.overwrite(routed, "bare", partition_by=["route"])
         )
-        .collect()
-    }
-    assert got == direct
-    # the hot hosts really are hot (skew exists to be handled)
-    hot = [h for h in got if h.startswith("hot.")]
-    assert sum(got[h][0] for h in hot) > 0.2 * N
+        bare = []
+        read = _jobs(spark, lambda: bare.append(cat.read("bare")))
+        action = _jobs(spark, lambda: bare[0].groupBy("route").count().collect())
+        # write_routes counts on the write itself: no job of its own
+        assert _jobs(spark, lambda: write_routes(enrich(decode_pages(pages)), cat)) == write
+        n = _jobs(
+            spark,
+            lambda: run_pipeline(
+                pages, SinkCatalog(spark, f"{base}/p"), with_metrics=True, resume=False
+            ),
+        )
+        assert n <= write + read + 2 * action
 
 
 def test_training_curation_stages(spark):
@@ -341,6 +369,72 @@ def test_spark_submit_py_files_runs():
         res = json.loads(out.stdout.strip().splitlines()[-1])
         assert res["total"] == 500
         assert sum(res["route_counts"].values()) == 500
+
+
+_RETRY_SCRIPT = """
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from mysql_cdc_rs_spark.operators.decode import decode_pages
+from mysql_cdc_rs_spark.operators.enrich import enrich
+from mysql_cdc_rs_spark.operators.route import route_counts, write_routes
+from mysql_cdc_rs_spark.session import build_session
+from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+from mysql_cdc_rs_spark.sources.pages import pages_df
+
+marker, sink, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
+spark = build_session(
+    "retry", master="local[2,2]",
+    extra_conf={"spark.ui.showConsoleProgress": "false"},
+)
+spark.sparkContext.setLogLevel("ERROR")
+
+
+@F.udf("string")
+def fail_once(url):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        open(marker, "a").close()
+        raise RuntimeError("injected failure of the first attempt")
+    return url
+
+
+pages = pages_df(spark, n, seed=42).withColumn("url", fail_once("url"))
+cat = SinkCatalog(spark, sink)
+counts = write_routes(enrich(decode_pages(pages)), cat)
+back = route_counts(cat.read("routed"))
+print(json.dumps({"counts": counts, "back": back, "failed": os.path.exists(marker)}))
+spark.stop()
+"""
+
+
+def test_write_routes_counts_exact_under_task_retry(tmp_path):
+    """The observed route counts come from successful task attempts only:
+    with partition 0's first attempt failing upstream of the write
+    (local[2,2] retries it), the counts still sum to N and equal a
+    read-back of the sink."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "retry.py"
+    script.write_text(_RETRY_SCRIPT)
+    marker = tmp_path / "failed"
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])),
+    )
+    out = subprocess.run(
+        [sys.executable, str(script), str(marker), str(tmp_path / "sink"), "500"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["failed"]
+    assert sum(res["counts"].values()) == 500
+    assert res["counts"] == res["back"]
 
 
 def test_curate_resumable_skips_and_recomputes(spark, tmp_path):
