@@ -107,7 +107,25 @@ def curate(
     # curate() call; the decode work itself was owed either way.
     quality.count()
 
-    pairs = DD.lsh_candidate_pairs(quality)
+    survivors = _drop_near_duplicates(quality, verify_jaccard)
+    # hand the persist lifecycle to the caller: release(survivors) after
+    # the consuming action, or the cached quality plan outlives the run
+    survivors._curate_persisted = quality
+    return survivors
+
+
+def _drop_near_duplicates(
+    corpus: DataFrame, verify_jaccard: float | None = None
+) -> DataFrame:
+    """``corpus`` minus its near-duplicates: LSH candidate pairs over
+    (doc_id, text), optionally verified by exact Jaccard (see ``curate``),
+    then the keep-first drop.
+
+    Keep-first policy: any doc that is the HIGHER member of a candidate
+    pair is a near-duplicate of an earlier doc -> dropped.  No broadcast
+    hint: drops scales with the corpus's dup mass (see module docstring).
+    """
+    pairs = DD.lsh_candidate_pairs(corpus.select("doc_id", "text"))
     if verify_jaccard is not None:
         from pyspark.sql import Window
 
@@ -118,17 +136,10 @@ def curate(
             .drop("_rn")
         )
         pairs = DD.ngram_jaccard_pairs(
-            quality, min_jaccard=verify_jaccard, candidates=bounded
+            corpus, min_jaccard=verify_jaccard, candidates=bounded
         )
-    # keep-first policy: any doc that is the HIGHER member of a candidate
-    # pair is a near-duplicate of an earlier doc -> dropped.  No broadcast
-    # hint: drops scales with the corpus's dup mass (see module docstring).
     drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    survivors = quality.join(drops, "doc_id", "left_anti")
-    # hand the persist lifecycle to the caller: release(survivors) after
-    # the consuming action, or the cached quality plan outlives the run
-    survivors._curate_persisted = quality
-    return survivors
+    return corpus.join(drops, "doc_id", "left_anti")
 
 
 def release(survivors: DataFrame) -> None:
@@ -173,13 +184,8 @@ def curate_resumable(
         pages_b, quality_fn
     )
 
-    def survivors_fn(qdf: DataFrame) -> DataFrame:
-        pairs = DD.lsh_candidate_pairs(qdf.select("doc_id", "text"))
-        drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-        return qdf.join(drops, "doc_id", "left_anti")
-
     return CheckpointedStage(catalog, "curate_survivors").run(
-        quality, survivors_fn
+        quality, _drop_near_duplicates
     )
 
 

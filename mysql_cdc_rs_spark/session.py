@@ -43,7 +43,7 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        # --- vectorized decode path sizing (Arrow batches to pandas UDFs) ---
+        # --- vectorized decode path sizing (Arrow batches to Python) ---
         # 2000-row batches keep the JVM->Python->JVM pipeline full: with one
         # huge batch per task the stage is latency-bound (measured 2.2x
         # slower at local[32]); small batches overlap Arrow IO with decode.
@@ -54,8 +54,8 @@ def build_session(
         # hung-worker incident (BENCH/SOAK.md): an unbounded batch would
         # make worker memory proportional to partition size and OOM-kills
         # would correlate with the largest partitions.  With this bound in
-        # place, a dead worker is environmental; speculation (below) is the
-        # fleet-scale backstop either way.
+        # place, a dead worker is environmental; speculation (see the
+        # transport note below) is the fleet-scale backstop either way.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         # --- scan sizing: keep partitions executor-memory-friendly at scale ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
@@ -64,46 +64,25 @@ def build_session(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # JVM<->Python worker transport: Unix domain sockets (Spark 4.1+).
+        # Forensics from a wedged 12.8M soak
+        # (BENCH/hang/tcp_retransmit_collapse_batch22.txt) showed the "silent
+        # hang" class is a LOOPBACK TCP RETRANSMISSION COLLAPSE: both
+        # worker<->JVM pairs sat with 2-3.8 MB retransmitted, dsack_dups 30-70,
+        # reordering:32 and rto backed off to 120s+ (backoff:14), every buffer
+        # full in both directions — the kernel dropping loopback segments under
+        # burst, then exponential backoff freezing the pipe for minutes (the
+        # earlier daemon-handshake framing was one symptom of the same wedge).
+        # AF_UNIX stream sockets have no retransmission, no congestion control
+        # and no rto backoff, so the whole failure class is unrepresentable.
+        # Speculation is NOT a cure in local mode — a speculative copy is never
+        # scheduled on the executor already running the attempt, and local[N]
+        # has exactly one executor; on a real cluster it is the straggler
+        # backstop for a dead Python worker.  Speculation, worker faulthandler
+        # tracebacks and the TCP transport (to reproduce the forensics) are all
+        # plain Spark confs: pass them through ``extra_conf``.
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
-    # Straggler backstop (opt-in locally, mandatory at fleet scale): a dead
-    # Python worker leaves its task blocked in epoll forever; speculation
-    # re-launches it.  Off by default here because single-attempt timing
-    # keeps bench rounds and plan snapshots deterministic — a 10^12-page
-    # run should set it (see BENCH/SOAK.md, hung-worker incident).
-    if os.environ.get("SPARK_GRAFT_SPECULATION") == "1":
-        builder = (
-            builder.config("spark.speculation", "true")
-            .config("spark.speculation.multiplier", "4")
-            .config("spark.speculation.quantile", "0.9")
-        )
-    # Crash forensics (opt-in): when a Python worker dies mid-task the JVM
-    # only reports "worker exited unexpectedly"; the faulthandler makes the
-    # worker dump a Python traceback on hard death (segfault/abort) so the
-    # failing frame is attributable.  Off by default — it adds a signal
-    # handler + temp-file write per worker launch.
-    if os.environ.get("SPARK_GRAFT_FAULTHANDLER") == "1":
-        builder = builder.config(
-            "spark.python.worker.faulthandler.enabled", "true"
-        ).config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
-    # JVM<->Python worker transport: Unix domain sockets (Spark 4.1+),
-    # default ON.  Forensics from a wedged 12.8M soak
-    # (BENCH/hang/tcp_retransmit_collapse_batch22.txt) showed the "silent
-    # hang" class is a LOOPBACK TCP RETRANSMISSION COLLAPSE: both
-    # worker<->JVM pairs sat with 2-3.8 MB retransmitted, dsack_dups 30-70,
-    # reordering:32 and rto backed off to 120s+ (backoff:14), every buffer
-    # full in both directions — the kernel dropping loopback segments under
-    # burst, then exponential backoff freezing the pipe for minutes (the
-    # earlier daemon-handshake framing was one symptom of the same wedge).
-    # AF_UNIX stream sockets have no retransmission, no congestion control
-    # and no rto backoff, so the whole failure class is unrepresentable.
-    # NOTE: speculation is NOT a cure in local mode — a speculative copy is
-    # never scheduled on the executor already running the attempt, and
-    # local[N] has exactly one executor; on a real cluster it still is.
-    # SPARK_GRAFT_UNIX_SOCKET=0 restores TCP (e.g. to reproduce forensics).
-    if os.environ.get("SPARK_GRAFT_UNIX_SOCKET", "1") == "1":
-        builder = builder.config(
-            "spark.python.unix.domain.socket.enabled", "true"
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -23,6 +23,7 @@ import gzip
 import hashlib
 from datetime import datetime, timedelta, timezone
 
+from mysql_cdc_rs_spark.functions.udfs import map_rows
 from mysql_cdc_rs_spark.kernel.decode import decode_page
 
 # --- deterministic PRNG -----------------------------------------------------
@@ -204,26 +205,21 @@ def _encode_record(seed: int, i: int, lang: str, cls: str) -> bytes:
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def pages_df(spark, n: int, seed: int = 42, num_partitions: int | None = None):
-    """Distributed deterministic generation: spark.range -> mapInPandas.
+def pages_for_ids(ids, seed: int):
+    """Generator pages for a one-column DataFrame of ids: id ``i`` becomes
+    the row ``make_record(seed, i)``.
 
     Each executor generates its own rows from (seed, id) — no driver-side
-    materialization, so the same generator scales to arbitrary n.
+    materialization, so the same generator scales to arbitrary n and any id
+    source (``spark.range``, a streaming counter, an id slice).
     """
-    import pandas as pd
+    return map_rows(ids, lambda i: [make_record(seed, i)], PAGES_SCHEMA)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_record(seed, int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
 
+def pages_df(spark, n: int, seed: int = 42, num_partitions: int | None = None):
+    """The first ``n`` generator pages, over ``spark.range``."""
     nparts = num_partitions or max(1, min(64, n // 2000 or 1))
-    return (
-        spark.range(0, n, numPartitions=nparts)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
-    )
+    return pages_for_ids(spark.range(0, n, numPartitions=nparts), seed)
 
 
 def pages_rows(n: int, seed: int = 42):

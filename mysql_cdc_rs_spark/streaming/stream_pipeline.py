@@ -36,7 +36,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.operators.route import route_table
-from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, make_record
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_for_ids
 
 
 def stream_pages(spark, pages_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
@@ -61,23 +61,13 @@ def stream_pages_rate(
     the file-arrival stream; swapping the source line is the whole diff —
     which is the point: Kafka in production is the same one-line swap.
     """
-    import pandas as pd
-
     raw = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rows_per_batch)
         .option("startTimestamp", 0)
         .load()
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_record(seed, int(v)) for v in pdf["value"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return raw.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return pages_for_ids(raw.select("value"), seed)
 
 
 def stream_pages_socket(spark, host: str, port: int) -> DataFrame:

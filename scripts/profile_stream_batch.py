@@ -58,21 +58,7 @@ def main() -> None:
 
     # --- seed state: N_SEEN_BATCHES completed batches, then profile batch
     # N_SEEN_BATCHES as the "current" one (ids follow on contiguously).
-    import pandas as pd
-
-    from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, make_record
-
-    def chunk_df(start: int, end: int):
-        def gen(batches):
-            for pdf in batches:
-                rows = [make_record(42, int(i)) for i in pdf["id"]]
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "html", "text", "lang"]
-                )
-
-        return spark.range(start, end, numPartitions=4).mapInPandas(
-            gen, schema=PAGES_SCHEMA
-        )
+    from mysql_cdc_rs_spark.sources.pages import pages_for_ids
 
     src = f"{WORK}/pages"
     os.makedirs(src, exist_ok=True)
@@ -81,9 +67,8 @@ def main() -> None:
     def write_chunk(i: int) -> str:
         target = os.path.join(src, f"chunk_{i:04d}.parquet")
         shutil.rmtree(stage_dir, ignore_errors=True)
-        chunk_df(i * N_DOCS, (i + 1) * N_DOCS).repartition(1).write.parquet(
-            stage_dir
-        )
+        ids = spark.range(i * N_DOCS, (i + 1) * N_DOCS, numPartitions=4)
+        pages_for_ids(ids, 42).repartition(1).write.parquet(stage_dir)
         part = [f for f in os.listdir(stage_dir) if f.endswith(".parquet")][0]
         os.rename(os.path.join(stage_dir, part), target)
         os.utime(target, (1_700_000_000 + i, 1_700_000_000 + i))

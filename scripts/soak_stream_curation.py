@@ -44,24 +44,6 @@ COMPACT_EVERY = (
 )
 
 
-def chunk_df(spark, start: int, end: int, seed: int = 42):
-    """pages_df over an id SLICE (the generator is pure in (seed, id))."""
-    import pandas as pd
-
-    from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, make_record
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_record(seed, int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return spark.range(start, end, numPartitions=16).mapInPandas(
-        gen, schema=PAGES_SCHEMA
-    )
-
-
 def du_mb(path: str) -> float:
     total = 0
     for root, _, files in os.walk(path):
@@ -73,6 +55,7 @@ def du_mb(path: str) -> float:
 def main() -> None:
     from mysql_cdc_rs_spark.session import build_session
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.sources.pages import pages_for_ids
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         compact_seen_buckets,
         read_curated,
@@ -124,9 +107,9 @@ def main() -> None:
         target = os.path.join(src, f"chunk_{i:04d}.parquet")
         if not os.path.exists(target):
             shutil.rmtree(stage, ignore_errors=True)
-            chunk_df(spark, i * CHUNK, (i + 1) * CHUNK).repartition(1).write.parquet(
-                stage
-            )
+            # generator pages over an id slice (pure in (seed, id))
+            ids = spark.range(i * CHUNK, (i + 1) * CHUNK, numPartitions=16)
+            pages_for_ids(ids, 42).repartition(1).write.parquet(stage)
             part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
             os.rename(os.path.join(stage, part), target)
         # pin a strictly increasing mtime per chunk: FileStreamSource
